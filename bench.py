@@ -83,9 +83,12 @@ def main() -> None:
     # pandas loop) has no JIT so its number is inherently steady-state;
     # ours pays one-time codegen/optimizer compilation on the first run
     # of each plan shape, which is session startup cost, not workload.
-    bench_xml(spark)
-    xml_samples = sorted(bench_xml(spark) for _ in range(3))
-    timings["xml_load_hot_path"] = round(xml_samples[1], 3)
+    try:
+        bench_xml(spark)
+        xml_samples = sorted(bench_xml(spark) for _ in range(3))
+        timings["xml_load_hot_path"] = round(xml_samples[1], 3)
+    except Exception as exc:
+        errors["xml_load_hot_path"] = f"{type(exc).__name__}: {exc}"[:500]
 
     # the memoized CCT build (a materialized view in a real deployment)
     # is a one-time cost that would otherwise land on whichever CCT

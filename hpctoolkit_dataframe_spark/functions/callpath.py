@@ -26,16 +26,6 @@ def parent_path(callpath: Column | str = "callpath") -> Column:
     return F.slice(c, 1, F.greatest(F.size(c) - 1, F.lit(0)))
 
 
-def path_key(callpath: Column | str = "callpath") -> Column:
-    """Compact 8-byte join key for a callpath array.
-
-    Joining on ``xxhash64(array)`` instead of the raw array keeps shuffle
-    keys fixed-width at scale; callers should additionally compare the
-    arrays themselves to guard against hash collisions.
-    """
-    return F.xxhash64(callpath)
-
-
 def has_prefix(prefix: Sequence[int], callpath: Column | str = "callpath") -> Column:
     """callpath[:len(prefix)] == prefix — reference _callpath_filter
     (hpctoolkit_dataframe.py:88-89). Empty prefix passes everything.

@@ -41,7 +41,8 @@ def flame_layout(
     width among its children proportionally (:490-501), offsets are
     parent offset + intra-sibling cumulative sum.  Segment order within
     a layer follows callpath order (the reference's DFS-preorder frame
-    order).
+    order).  A NULL value draws a zero-width bar, and sibling sums skip
+    NULL the way pandas ``Series.sum`` skips NaN.
     """
     if min_depth is None:
         min_depth = len(prefix) + 1
@@ -74,10 +75,10 @@ def flame_layout(
         level = by_depth[depth]
         new_geom: dict[int, tuple[float, float]] = {}
         if depth == min_depth:
-            total = sum(r["v"] for r in level) or 1.0
+            total = sum(r["v"] or 0.0 for r in level) or 1.0
             cum = 0.0
             for r in level:
-                width = r["v"] / total * NORMALIZATION_CONSTANT
+                width = (r["v"] or 0.0) / total * NORMALIZATION_CONSTANT
                 new_geom[r["id"]] = (width, cum)
                 layout.append({"id": r["id"], "depth": depth, "width": width,
                                "offset": cum, "label": r["label"]})
@@ -90,10 +91,10 @@ def flame_layout(
                 if parent not in geom:
                     continue  # parent not drawn (outside the layout)
                 pw, po = geom[parent]
-                total = sum(r["v"] for r in items) or 1.0
+                total = sum(r["v"] or 0.0 for r in items) or 1.0
                 cum = 0.0
                 for r in items:
-                    width = r["v"] / total * pw
+                    width = (r["v"] or 0.0) / total * pw
                     new_geom[r["id"]] = (width, po + cum)
                     layout.append({"id": r["id"], "depth": depth,
                                    "width": width, "offset": po + cum,

@@ -269,14 +269,14 @@ FROM cct c LEFT JOIN best b ON b.id = c.id""",
           doc="ratio-of-parent with ancestor walk-up (reference A3, :360-384)")
 def cct_ratio_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value is the rollup SUM of positive leaf revenues -> monotone up
-    # the tree, so the walk-up stops at the immediate parent; the
-    # monotone hint collapses the ancestor explode to one parent join
-    # while the oracle stays the FULL walk-up SQL (the equivalence is
-    # what the hash check proves)
+    # the tree, so the walk-up stops at the immediate parent and the
+    # plain parent join (walk_up=False: no explode, no aggregate)
+    # computes it, while the oracle stays the FULL walk-up SQL (the
+    # equivalence is what the hash check proves)
     df = ops.with_ratio_of_parent(build_cct(spark, sf_dir), "value", "ratio",
                                   carry_cols=("depth", "value"),
                                   persist_input=False,  # build is memoized
-                                  monotone=True)
+                                  walk_up=False)
     return df.select("id", "depth", "value", "ratio")
 
 
@@ -293,15 +293,13 @@ FROM cct c LEFT JOIN best b ON b.id = c.id""",
 def cct_ratio_of_parent_walkup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = build_cct(spark, sf_dir).withColumn(
         "avg_leaf", F.col("value").cast("double") / F.col("leaves").cast("double"))
-    # depth_id_join: the rollup CCT satisfies the operator's (depth, id)
-    # addressing preconditions by construction (id IS the level key with
-    # per-level offsets, root id -1) — the exploded ancestors shuffle two
-    # BIGINTs instead of prefix arrays, mirroring the oracle's r9 anc
-    # rewrite (guide §2.3)
+    # the rollup CCT meets the operator's (depth, callpath tail)
+    # precondition by construction (each level key encodes its parent),
+    # so the exploded ancestors shuffle two BIGINTs, like the oracle's
+    # (depth, id) anc join
     df = ops.with_ratio_of_parent(df, "avg_leaf", "ratio",
                                   carry_cols=("depth", "avg_leaf"),
-                                  persist_input=False,  # build is memoized
-                                  depth_id_join=True)
+                                  persist_input=False)  # build is memoized
     return df.select("id", "depth", "avg_leaf", "ratio")
 
 

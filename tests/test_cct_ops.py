@@ -140,106 +140,64 @@ def test_fragment_contiguity_semantics(spark):
         ops.at_paths(df, (3, 17))
 
 
-def test_broadcast_scan_equals_explode_walkup(spark, tree, monkeypatch):
-    """The r9 zero-shuffle broadcast-scan walk-up must reproduce the
-    ancestor-explode path bit-for-bit — on the non-monotone sf0.001
-    CCT (real tree, avg-leaf metric) AND on the synthetic tree with
-    per-profile partitioning and the skip-smaller-ancestor branch."""
+def _ratios(df, **kw):
+    """{(profile, id): ratio} of the walk-up on ``value``."""
+    return {(r["profile_id"], r["id"]): r["r"]
+            for r in cct.with_ratio_of_parent(
+                df, "value", "r", partition_cols=["profile_id"],
+                **kw).collect()}
+
+
+def test_distributed_walkup_equals_in_memory_walk(spark, tree):
+    """The distributed (depth, callpath tail) walk-up must reproduce the
+    independent in-memory walk bit-for-bit — on the non-monotone sf0.001
+    CCT (real tree, avg-leaf metric), on the synthetic per-profile tree
+    with its skip-smaller-ancestor branch, and on a tree whose root id
+    is 0: the root is found at depth 0 whatever its id."""
     from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
 
     df = build_cct(spark, "/root/testdata/sf0.001").withColumn(
         "avg_leaf", F.col("value").cast("double") / F.col("leaves"))
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    bcast = cct.with_ratio_of_parent(
+    dist = cct.with_ratio_of_parent(
         df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    explode = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    a = {r["id"]: (r["depth"], r["r"]) for r in bcast.collect()}
-    b = {r["id"]: (r["depth"], r["r"]) for r in explode.collect()}
+    walk = cct.with_ratio_of_parent(
+        df, "avg_leaf", "r", collect_threshold=10**6)
+    a = {r["id"]: (r["depth"], r["r"]) for r in dist.collect()}
+    b = {r["id"]: (r["depth"], r["r"]) for r in walk.collect()}
     assert a == b and len(a) > 100
-    # per-profile isolation + carry=None join-back shape, both paths
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    p_b = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"]).collect()
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    p_e = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"]).collect()
-    key = lambda rows: sorted((r["profile_id"], r["id"], r["r"])
-                              for r in rows)
-    assert key(p_b) == key(p_e)
+    # per-profile isolation + carry=None join-back shape
+    assert _ratios(tree) == _ratios(tree, collect_threshold=10**6)
+    root0 = spark.createDataFrame([
+        ("p1", 0, [], 100.0),
+        ("p1", 1, [1], 80.0),
+        ("p1", 2, [1, 2], 10.0),
+        ("p1", 3, [1, 2, 3], 50.0),
+        ("p2", 0, [], 10.0),
+        ("p2", 1, [1], 20.0),
+    ], "profile_id string, id long, callpath array<long>, value double")
+    got = _ratios(root0)
+    assert got == _ratios(root0, collect_threshold=10**6)
+    assert got[("p1", 0)] == 1.0 and got[("p1", 1)] == pytest.approx(0.8)
+    assert got[("p1", 3)] == pytest.approx(0.625)  # 50/80, skips node 2
+    assert got[("p2", 1)] == pytest.approx(2.0)    # no stopper: the root
 
 
-def test_walkup_bcast_cap_disabled_at_default(spark, monkeypatch):
-    """ADVICE r9 #1: with the knob at its default 0 the row cap must be
-    0 (not max(1, ...) = 1), so no frame — not even 1 row — can slip
-    into the 'disabled' broadcast-scan path, and the walk-up branch
-    skips its sizing count() entirely."""
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 0)
-    assert cct._walkup_bcast_row_cap(spark) == 0
-    monkeypatch.setattr(cct, "WALKUP_BCAST_ROWS_PER_HEAP_GIB", 8_000_000)
-    assert cct._walkup_bcast_row_cap(spark) > 0
-
-
-def test_monotone_hint_equals_walkup_explode(spark):
-    """The monotone fast path (one parent join) must return exactly the
-    explode/walk-up result when the metric really is monotone — the
-    claim cct_ratio_of_parent's oracle hash also proves at two SFs."""
+def test_parent_join_equals_walkup_on_monotone_value(spark):
+    """On a metric monotone up the tree (the rollup SUM ``value``) the
+    walk stops at the immediate parent, so the plain parent join
+    (walk_up=False) must return exactly the walk-up result — the claim
+    cct_ratio_of_parent's oracle hash also proves at two SFs."""
     from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
 
     df = build_cct(spark, "/root/testdata/sf0.001")
-    fast = cct.with_ratio_of_parent(
+    parent = cct.with_ratio_of_parent(
         df, "value", "r", carry_cols=("depth",), persist_input=False,
-        monotone=True)
-    slow = cct.with_ratio_of_parent(
+        walk_up=False)
+    walk = cct.with_ratio_of_parent(
         df, "value", "r", carry_cols=("depth",), persist_input=False)
-    a = {r["id"]: (r["depth"], r["r"]) for r in fast.collect()}
-    b = {r["id"]: (r["depth"], r["r"]) for r in slow.collect()}
-    assert a == b
-
-
-def test_depth_id_join_equals_walkup_explode(spark, tree):
-    """The r13 (depth, id) ancestor addressing must reproduce the
-    prefix-array join bit-for-bit — on the non-monotone sf0.001 CCT
-    (real tree, avg-leaf metric) AND on the synthetic per-profile tree
-    including the skip-smaller-ancestor and NULL-ancestor branches."""
-    from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
-
-    df = build_cct(spark, "/root/testdata/sf0.001").withColumn(
-        "avg_leaf", F.col("value").cast("double") / F.col("leaves"))
-    di = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False,
-        depth_id_join=True)
-    arr = cct.with_ratio_of_parent(
-        df, "avg_leaf", "r", carry_cols=("depth",), persist_input=False)
-    a = {r["id"]: (r["depth"], r["r"]) for r in di.collect()}
-    b = {r["id"]: (r["depth"], r["r"]) for r in arr.collect()}
+    a = {r["id"]: (r["depth"], r["r"]) for r in parent.collect()}
+    b = {r["id"]: (r["depth"], r["r"]) for r in walk.collect()}
     assert a == b and len(a) > 100
-    # per-profile isolation + carry=None join-back shape, both paths
-    p_d = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"],
-        depth_id_join=True).collect()
-    p_a = cct.with_ratio_of_parent(
-        tree, "value", "r", partition_cols=["profile_id"]).collect()
-    key = lambda rows: sorted((r["profile_id"], r["id"], r["r"])
-                              for r in rows)
-    assert key(p_d) == key(p_a)
-    # NULL-metric ancestor stops the walk identically in both paths
-    rows = [
-        ("p1", -1, [], 10.0),
-        ("p1", 1, [1], None),
-        ("p1", 2, [1, 2], 5.0),
-        ("p1", 3, [1, 2, 3], 4.0),
-    ]
-    ndf = spark.createDataFrame(
-        rows, "profile_id string, id long, callpath array<long>, value double")
-    out = {r["id"]: r["r"] for r in cct.with_ratio_of_parent(
-        ndf, "value", "r", partition_cols=["profile_id"],
-        depth_id_join=True).collect()}
-    assert out[-1] == 1.0
-    assert out[1] is None
-    assert out[2] is None
-    assert out[3] == pytest.approx(0.8)
 
 
 def test_deepest_aggregate_maxby_semantics(spark):

@@ -43,6 +43,31 @@ def test_flame_layout_prefix_and_depth(tree):
     assert ids == {3, 4}  # only the subtree below node 1, min_depth=2
 
 
+def test_flame_layout_null_value_draws_zero_width(spark):
+    """A NULL value (here a ratio-of-parent under a NULL-valued parent)
+    draws a zero-width bar instead of raising; sibling sums skip it."""
+    from hpctoolkit_dataframe_spark.operators import cct
+
+    rows = [
+        (-1, [], 100.0),
+        (1, [1], 60.0),
+        (2, [2], None),
+        (3, [1, 3], 30.0),
+        (4, [1, 4], 20.0),
+        (5, [2, 5], 20.0),
+    ]
+    df = cct.with_ratio_of_parent(spark.createDataFrame(
+        rows, "id long, callpath array<long>, v double"), "v", "r")
+    assert {r["id"]: r["r"] for r in df.collect()}[5] is None
+    by_id = {s["id"]: s for s in flame.flame_layout(df, "r", label_col=None)}
+    two_pi = 2 * math.pi
+    assert by_id[1]["width"] == pytest.approx(two_pi)  # 0.6 / (0.6 + NULL)
+    assert by_id[2]["width"] == 0.0
+    assert by_id[2]["offset"] == pytest.approx(two_pi)
+    assert by_id[3]["width"] == pytest.approx(0.6 * two_pi)  # 0.5 of 0.5+1/3
+    assert by_id[5]["width"] == 0.0
+
+
 def test_flame_graph_renders(tree):
     pytest.importorskip("matplotlib")
     ax = flame.flame_graph(tree, "v", show=False)

@@ -67,22 +67,20 @@ SELECTION = {
         " bucket) candidate pairs under user skew (r7 skewed-clone"
         " finding)."),
     "cct_ratio_of_parent": (
-        "Monotone walk-up short-circuit (r7): the rollup-sum metric"
+        "Plain parent join (walk_up=False): the rollup-sum metric"
         " provably stops the walk at the immediate parent, so the plan"
-        " is ONE slim parent self-join (shuffle-hash) — no explode, no"
-        " aggregate.  The general non-monotone path (explode to"
-        " ancestor prefixes, shuffle-hash join, max-struct deepest"
-        " stopper) is cct_ratio_of_parent_walkup's plan."),
+        " is ONE slim parent self-join (shuffle-hash) on the BIGINT"
+        " (depth, callpath tail) key — no explode, no aggregate.  The"
+        " general non-monotone walk-up is cct_ratio_of_parent_walkup's"
+        " plan; the oracle for both is the full walk-up SQL."),
     "cct_ratio_of_parent_walkup": (
-        "Ancestor walk-up, general path: explode to ancestor prefixes,"
-        " shuffle-hash join against the node table (SHJ->SMJ past the"
-        " heap-scaled build cap), max-struct deepest stopper, join-"
-        " back.  The r9 broadcast-scan variant (packed path-hash map +"
-        " searchsorted mapInPandas scan) is retained opt-in via"
-        " SPARK_GRAFT_WALKUP_BCAST_ROWS_PER_HEAP_GIB; a quiet-box"
-        " matched A/B showed explode >= scan at every scale and the"
-        " scan's driver-assembled map caps at driver heap — see"
-        " PERF.md r9 re-adjudication."),
+        "Ancestor walk-up: explode each node to its ancestor depths,"
+        " address each ancestor by (depth, callpath tail) — two BIGINTs,"
+        " the root at depth 0 whatever its id — shuffle-hash join"
+        " against the node table (SHJ->SMJ past the heap-scaled build"
+        " cap), max_by deepest stopper (codegen HashAggregate), no"
+        " join-back (carried columns ride as group keys).  No Python"
+        " stage."),
     "cct_merge_profiles": (
         "Multi-profile merge: ONE grouping-sets pass builds all 3"
         " per-profile trees (no per-profile rescan; p rides every"
