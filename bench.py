@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hpctoolkit_dataframe_spark import get_spark  # noqa: E402
-from hpctoolkit_dataframe_spark.queries import REGISTRY  # noqa: E402
+from hpctoolkit_dataframe_spark.queries import BUILDS, REGISTRY  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 XML_GLOB = "/root/reference/test/data/experiment*.xml"
@@ -90,57 +90,12 @@ def main() -> None:
     except Exception as exc:
         errors["xml_load_hot_path"] = f"{type(exc).__name__}: {exc}"[:500]
 
-    # the memoized CCT build (a materialized view in a real deployment)
-    # is a one-time cost that would otherwise land on whichever CCT
-    # query the registry order puts first, distorting its median;
-    # measure it once, explicitly
-    t0 = time.time()
-    try:
-        REGISTRY["cct_nodes"].fn(spark, SF_DIR).count()
-        timings["cct_build"] = round(time.time() - t0, 3)
-    except Exception as exc:
-        errors["cct_build"] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # same treatment for PQ codebook training (memoized per session)
-    t0 = time.time()
-    try:
-        from hpctoolkit_dataframe_spark.queries.vectors import _pq_train
-
-        _pq_train(spark, SF_DIR)
-        timings["pq_train"] = round(time.time() - t0, 3)
-    except Exception as exc:
-        errors["pq_train"] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # and for the duplicate-span hit table (memoized; three consumers)
-    t0 = time.time()
-    try:
-        from hpctoolkit_dataframe_spark.queries.spans import _dup_hits
-
-        _dup_hits(spark, SF_DIR)
-        timings["span_hits_build"] = round(time.time() - t0, 3)
-    except Exception as exc:
-        errors["span_hits_build"] = f"{type(exc).__name__}: {exc}"[:500]
-
-    # r12 memoized shared builds (same convention as cct_build/pq_train:
-    # the one-time materialization is timed EXPLICITLY so the
-    # median-of-3 loop below cannot hide it): the LSH pair graph (7
-    # consumers), its cluster labeling (3), the Lloyd coarse codebook
-    # (5), and the simhash fingerprint split (2)
-    def _r12_builds():
-        from hpctoolkit_dataframe_spark.queries.dedup import (
-            clusters_materialized, fingerprint_split)
-        from hpctoolkit_dataframe_spark.queries.textops import (
-            lsh_pairs_materialized)
-        from hpctoolkit_dataframe_spark.queries.vectors import (
-            _lloyd_trained, vec_pairs_materialized)
-
-        return (("lsh_pairs_build", lsh_pairs_materialized),
-                ("dedup_clusters_build", clusters_materialized),
-                ("lloyd_build", _lloyd_trained),
-                ("fingerprint_split_build", fingerprint_split),
-                ("vec_pairs_build", vec_pairs_materialized))
-
-    for bname, builder in _r12_builds():
+    # every memoized shared build (a materialized view in a real
+    # deployment) is a one-time cost that would otherwise land on
+    # whichever consumer the registry order puts first, distorting its
+    # median; time each one once, explicitly, in BUILDS order (a build
+    # listed after one it nests excludes that one's time)
+    for bname, builder in BUILDS.items():
         t0 = time.time()
         try:
             builder(spark, SF_DIR)

@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import load_table, register
+from . import load_table, memoized_build, register
 from .textops import _tokens
 
 # Golden fixtures computed by an INDEPENDENT pure-Python BPE twin at
@@ -262,7 +262,13 @@ def bpe_encode(docs: DataFrame, merges: list[tuple], *,
         out, pandas_udf(enc, T.ArrayType(T.StringType()))(F.col(text_col)))
 
 
-_ENCODE_CACHE: dict = {}
+@memoized_build("bpe_merges_build")
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """The merges trained on the corpus's top VOCAB_CAP words."""
+    wc = word_counts(spark, sf_dir)
+    top = (wc.orderBy(F.col("c").desc(), F.col("w"))
+           .limit(VOCAB_CAP).collect())
+    return train_bpe([(r["w"], r["c"]) for r in top])
 
 
 @register("bpe_encode_stats", sql=f"""
@@ -277,20 +283,9 @@ fixture-build time (tools/make_bpe_fixture.py), keyed by corpus
 size — train + encode are iterative, but their output is exact and
 deterministic, so it hash-gates like any other query.""")
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import evict_dead_sessions, session_key
-
-    key = (session_key(spark), sf_dir)
-    merges = _ENCODE_CACHE.get(key)
-    if merges is None:
-        wc = word_counts(spark, sf_dir)
-        top = (wc.orderBy(F.col("c").desc(), F.col("w"))
-               .limit(VOCAB_CAP).collect())
-        merges = train_bpe([(r["w"], r["c"]) for r in top])
-        evict_dead_sessions(_ENCODE_CACHE, key[0])
-        _ENCODE_CACHE[key] = merges
     docs = load_table(spark, sf_dir, "documents", spread=True).filter(
         F.col("text").isNotNull())
-    enc = bpe_encode(docs, merges)
+    enc = bpe_encode(docs, _bpe_merges(spark, sf_dir))
     return enc.select(
         "doc_id",
         F.size("tokens").cast("long").alias("n_tokens"),

@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import cct as ops
-from . import (evict_dead_sessions, hash8_sql, load_table, register,
-               session_key)
+from . import hash8_sql, load_table, memoized_build, register
 
 REGION_OFF = 1
 NATION_OFF = 10
@@ -81,9 +80,7 @@ cct AS MATERIALIZED (
 )"""
 
 
-_CCT_CACHE: dict = {}
-
-
+@memoized_build("cct_build")
 def build_cct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-shuffle CCT materialization via 5-key rollup.
 
@@ -97,16 +94,9 @@ def build_cct(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares one build, exactly like a materialized view a real
     deployment would maintain.
     """
-    key = (session_key(spark), sf_dir)
-    cached = _CCT_CACHE.get(key)
-    if cached is not None:
-        return cached
     out = build_cct_plan(spark, sf_dir)
-    out = out.repartition(
+    return out.repartition(
         _cct_checkpoint_partitions(spark, sf_dir)).localCheckpoint(eager=True)
-    evict_dead_sessions(_CCT_CACHE, key[0])
-    _CCT_CACHE[key] = out
-    return out
 
 
 def _cct_checkpoint_partitions(spark: SparkSession, sf_dir: str) -> int:

@@ -50,8 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from . import (REGISTRY, evict_dead_sessions, load_table, register,
-               session_key)
+from . import REGISTRY, load_table, memoized_build, register
 from .vectors import (
     DIM, KMEANS_ITERS, _NORM2_SQL, _QINT_SQL, _kmeans_ctes,
     _lloyd_trained, _nonzero_embedding, _norm2, _qint, _quantized_corpus)
@@ -1283,28 +1282,17 @@ log-likelihood ratio between the smoothed bag-of-hashed-buckets model
 of the lang='en' target slice and the raw corpus model.  Positive
 score = doc looks more target-like than the corpus average; resampling
 keeps docs proportionally.  B=1024 buckets, add-1 smoothing.""")
+@memoized_build("dsir_build")
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: memoized per (session, sf_dir) — curation_funnel_report
-    # re-ran the whole tokenize->bucket->model->score pipeline on top
-    # of this entry's own run (the scored table is the artifact a DSIR
-    # resampling pass persists)
-    key = (session_key(spark), sf_dir)
-    hit = _DSIR_CACHE.get(key)
-    if hit is not None:
-        return hit
+    # r12: memoized — curation_funnel_report re-ran the whole
+    # tokenize->bucket->model->score pipeline on top of this entry's
+    # own run (the scored table is the artifact a DSIR resampling pass
+    # persists)
     docs = load_table(spark, sf_dir, "documents", spread=True).filter(
         F.col("text").isNotNull())
     tb = dsir_token_buckets(docs).localCheckpoint(eager=True)
     w = dsir_weights_from_model(dsir_count_model(tb))
-    out = dsir_score(tb, w).localCheckpoint(eager=True)
-    for k in [k for k in _DSIR_CACHE if k[0] == key[0]]:
-        del _DSIR_CACHE[k]
-    evict_dead_sessions(_DSIR_CACHE, key[0])
-    _DSIR_CACHE[key] = out
-    return out
-
-
-_DSIR_CACHE: dict = {}
+    return dsir_score(tb, w).localCheckpoint(eager=True)
 
 
 def dsir_token_buckets(docs: DataFrame) -> DataFrame:

@@ -25,8 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import (evict_dead_sessions, hash8_sql, load_table, register,
-               session_key)
+from . import hash8_sql, load_table, memoized_build, register
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on"]
 N_HASHES = 8
@@ -231,7 +230,24 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash LSH candidate pairs: band the signature, self-join on band key
 # ---------------------------------------------------------------------------
-_KEYS_CACHE: dict = {}
+@memoized_build("lsh_band_keys_build")
+def _lsh_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpointed (doc_id, band_idx, key) band-key table, memoized
+    like build_cct: dedup_clusters and training_shard_manifest re-run
+    minhash_lsh_pairs, and the materialized keys are the shared
+    prefix."""
+    sig = minhash_signatures(spark, sf_dir)
+    # posexplode instead of a 4-way union so the signature
+    # computation runs once, not once per band branch
+    keys = sig.select(
+        "doc_id",
+        F.posexplode(F.array(
+            *[F.md5(F.concat(F.col(f"mh{2*b}"), F.col(f"mh{2*b+1}")))
+              for b in range(N_BANDS)])).alias("band_idx", "key"))
+    # materialize: the whole shingle->minhash->band pipeline would
+    # otherwise run once per self-join side
+    return keys.localCheckpoint(eager=True)
+
 
 _BAND_SQL = ", ".join(
     f"md5(mh{2*b} || mh{2*b+1}) AS band{b}" for b in range(N_BANDS))
@@ -260,25 +276,7 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM pruned a JOIN pruned b
   ON a.band_idx = b.band_idx AND a.key = b.key AND a.doc_id < b.doc_id""")
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the checkpointed band-key table is memoized per (session, sf_dir)
-    # like build_cct: dedup_clusters and training_shard_manifest re-run
-    # this pipeline, and the materialized keys are the shared prefix
-    cache_key = (session_key(spark), sf_dir)
-    keys = _KEYS_CACHE.get(cache_key)
-    if keys is None:
-        sig = minhash_signatures(spark, sf_dir)
-        # posexplode instead of a 4-way union so the signature
-        # computation runs once, not once per band branch
-        keys = sig.select(
-            "doc_id",
-            F.posexplode(F.array(
-                *[F.md5(F.concat(F.col(f"mh{2*b}"), F.col(f"mh{2*b+1}")))
-                  for b in range(N_BANDS)])).alias("band_idx", "key"))
-        # materialize: the whole shingle->minhash->band pipeline would
-        # otherwise run once per self-join side
-        keys = keys.localCheckpoint(eager=True)
-        evict_dead_sessions(_KEYS_CACHE, cache_key[0])
-        _KEYS_CACHE[cache_key] = keys
+    keys = _lsh_band_keys(spark, sf_dir)
     # Exclude hot band keys BEFORE the self-join (same failure class as
     # the shingle DF cap one layer down): degenerate content collapses
     # to identical signatures, and one 10^6-member band key would emit
@@ -303,9 +301,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIRS_CACHE: dict = {}
-
-
+@memoized_build("lsh_pairs_build")
 def lsh_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed MinHash-LSH candidate pairs, memoized per
     (session, sf_dir).
@@ -319,16 +315,7 @@ def lsh_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule).  The registry entry itself stays un-memoized so its plan
     keeps showing the cap-below-self-join contract (pinned in
     tests/test_plans.py); consumers import this helper instead."""
-    key = (session_key(spark), sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = minhash_lsh_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    for k in [k for k in _PAIRS_CACHE if k[0] == key[0]]:
-        del _PAIRS_CACHE[k]
-    evict_dead_sessions(_PAIRS_CACHE, key[0])
-    _PAIRS_CACHE[key] = pairs
-    return pairs
+    return minhash_lsh_pairs(spark, sf_dir).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import evict_dead_sessions, load_table, register, session_key
+from . import load_table, memoized_build, register
 
 QUANT = 10_000
 N_QUERIES = 5
@@ -305,7 +305,30 @@ def _bucket_sql() -> str:
     return " + ".join(parts)
 
 
-_BUCKETED_CACHE: dict = {}
+@memoized_build("lsh_bucketed_build")
+def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Checkpointed (vec_id, qe, n2, bucket) table, memoized like
+    textops' band keys: embedding_dup_clusters and repeated bench
+    samples re-enter lsh_near_dup_pairs, and the quantization + 8
+    plane dots per vector are its shared prefix."""
+    from ._veckernel import hyperplane_bucket_udf
+
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        _nonzero_embedding(F.col("embedding"))).select(
+        "vec_id", _qint(F.col("embedding")).alias("qe"),
+        _norm2(F.col("embedding")).alias("n2"))
+    # zero-norm: no cosine (ANSI div-by-zero)
+    # r13: the 8 interpreted 64-lane plane dots per row became one
+    # Arrow int64 GEMM (same sign/NULL semantics — _veckernel);
+    # runs inside the checkpoint, so the query plan is unchanged
+    bucket = hyperplane_bucket_udf(PLANES)(F.col("qe"))
+    # spread the single input split, then materialize: quantization
+    # + 8 plane dots per vector would otherwise run once PER
+    # SELF-JOIN SIDE
+    return (
+        emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+        .withColumn("bucket", bucket.cast("long"))
+        .localCheckpoint(eager=True))
 
 
 @register("lsh_near_dup_pairs", sql=f"""
@@ -340,33 +363,7 @@ WHERE CAST(dot AS DOUBLE)
         / (sqrt(CAST(an2 AS DOUBLE)) * sqrt(CAST(bn2 AS DOUBLE)))
       >= {NEAR_DUP_COSINE}""")
 def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the checkpointed bucketed table is memoized per (session, sf_dir)
-    # like textops' band keys: embedding_dup_clusters and repeated bench
-    # samples re-enter this pipeline, and the quantization + 8 plane
-    # dots per vector are its shared prefix
-    cache_key = (session_key(spark), sf_dir)
-    bucketed = _BUCKETED_CACHE.get(cache_key)
-    if bucketed is None:
-        from ._veckernel import hyperplane_bucket_udf
-
-        emb = load_table(spark, sf_dir, "embeddings").filter(
-            _nonzero_embedding(F.col("embedding"))).select(
-            "vec_id", _qint(F.col("embedding")).alias("qe"),
-            _norm2(F.col("embedding")).alias("n2"))
-        # zero-norm: no cosine (ANSI div-by-zero)
-        # r13: the 8 interpreted 64-lane plane dots per row became one
-        # Arrow int64 GEMM (same sign/NULL semantics — _veckernel);
-        # runs inside the checkpoint, so the query plan is unchanged
-        bucket = hyperplane_bucket_udf(PLANES)(F.col("qe"))
-        # spread the single input split, then materialize: quantization
-        # + 8 plane dots per vector would otherwise run once PER
-        # SELF-JOIN SIDE
-        bucketed = (
-            emb.repartition(spark.sparkContext.defaultParallelism, "vec_id")
-            .withColumn("bucket", bucket.cast("long"))
-            .localCheckpoint(eager=True))
-        evict_dead_sessions(_BUCKETED_CACHE, cache_key[0])
-        _BUCKETED_CACHE[cache_key] = bucketed
+    bucketed = _lsh_bucketed(spark, sf_dir)
     # Exclude hot buckets BEFORE the self-join: degenerate embeddings
     # (zeros, duplicates) collapse into one bucket, and a 10^6-member
     # bucket would emit ~10^12 candidate pairs.  Same recipe as the
@@ -396,9 +393,7 @@ def lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VEC_PAIRS_CACHE: dict = {}
-
-
+@memoized_build("vec_pairs_build")
 def vec_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed hyperplane-LSH cosine near-dup pairs, memoized per
     (session, sf_dir) — the vector twin of textops'
@@ -407,16 +402,7 @@ def vec_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate) on top of the memoized bucket table; the registry entry
     keeps the un-memoized plan so the cap-below-self-join pin stays
     testable."""
-    key = (session_key(spark), sf_dir)
-    hit = _VEC_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = lsh_near_dup_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    for k in [k for k in _VEC_PAIRS_CACHE if k[0] == key[0]]:
-        del _VEC_PAIRS_CACHE[k]
-    evict_dead_sessions(_VEC_PAIRS_CACHE, key[0])
-    _VEC_PAIRS_CACHE[key] = pairs
-    return pairs
+    return lsh_near_dup_pairs(spark, sf_dir).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -529,9 +515,7 @@ c{k} AS (SELECT cell, list(m ORDER BY i) AS ce FROM p{k} GROUP BY cell)""")
     return ",\n".join(parts)
 
 
-_CORPUS_CACHE: dict = {}
-
-
+@memoized_build("quantized_corpus_build")
 def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (vec_id, qe, n2) corpus — the training loop and the
     probe/candidate branches all reuse one materialization.
@@ -539,24 +523,13 @@ def _quantized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12: memoized per (session, sf_dir) — nine registry entries
     (kmeans/ivf/pq/ivfpq/semdedup families) each re-quantized and
     re-checkpointed the identical corpus; one materialization per
-    session is the deployment shape (guide §5: reuse + recompute cost).
-    Most-recent-per-session eviction like the span-hits cache so
-    fixture-cycling tests don't pin every dir's checkpoint blocks."""
-    key = (session_key(spark), sf_dir)
-    hit = _CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    session is the deployment shape (guide §5: reuse + recompute cost)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _qint(F.col("embedding")).alias("qe"),
         _norm2(F.col("embedding")).alias("n2"))
-    out = emb.repartition(
+    return emb.repartition(
         spark.sparkContext.defaultParallelism, "vec_id"
     ).localCheckpoint(eager=True)
-    for k in [k for k in _CORPUS_CACHE if k[0] == key[0]]:
-        del _CORPUS_CACHE[k]
-    evict_dead_sessions(_CORPUS_CACHE, key[0])
-    _CORPUS_CACHE[key] = out
-    return out
 
 
 def _lloyd(emb: DataFrame, iters: int = KMEANS_ITERS,
@@ -612,9 +585,7 @@ def _lloyd(emb: DataFrame, iters: int = KMEANS_ITERS,
     return cents, assigned
 
 
-_LLOYD_CACHE: dict = {}
-
-
+@memoized_build("lloyd_build")
 def _lloyd_trained(spark: SparkSession,
                    sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Memoized default-args Lloyd run over the quantized corpus, per
@@ -627,17 +598,8 @@ def _lloyd_trained(spark: SparkSession,
     iteration rounds without changing a single output row.  ``cents``
     is checkpointed too (N_CELLS rows) so consumers don't re-run the
     two re-estimate aggregations per action."""
-    key = (session_key(spark), sf_dir)
-    hit = _LLOYD_CACHE.get(key)
-    if hit is not None:
-        return hit
     cents, assigned = _lloyd(_quantized_corpus(spark, sf_dir))
-    cents = cents.localCheckpoint(eager=True)
-    for k in [k for k in _LLOYD_CACHE if k[0] == key[0]]:
-        del _LLOYD_CACHE[k]
-    evict_dead_sessions(_LLOYD_CACHE, key[0])
-    _LLOYD_CACHE[key] = (cents, assigned)
-    return cents, assigned
+    return cents.localCheckpoint(eager=True), assigned
 
 
 @register("kmeans_centroids", sql=f"""
@@ -775,9 +737,6 @@ b{m}c{k} AS (SELECT cell, list(m ORDER BY i) AS ce FROM b{m}p{k}
     return ",\n".join(parts)
 
 
-_PQ_CACHE: dict = {}
-
-
 def _pq_assigned(emb: DataFrame, books: list[list[tuple]]) -> DataFrame:
     """(m, vec_id, qe, cell, d): every vector's nearest codebook cell
     in every subspace — ONE Arrow int64 kernel crossing for all M_SUB
@@ -803,6 +762,7 @@ def _pq_assigned(emb: DataFrame, books: list[list[tuple]]) -> DataFrame:
         F.col("__s")["d"].alias("d"))
 
 
+@memoized_build("pq_train")
 def _pq_train(spark: SparkSession, sf_dir: str):
     """All M_SUB codebooks trained in ONE Lloyd pipeline — identical
     per-subspace semantics (same seeds, same (d, cell) tie-break).
@@ -817,10 +777,6 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     replaces the per-iteration broadcast join + row_number window
     (Exchange + Sort over the 4x-exploded corpus) + localCheckpoint.
     Re-estimate arithmetic verbatim, outputs bit-identical."""
-    cache_key = (session_key(spark), sf_dir)
-    hit = _PQ_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
     emb = _quantized_corpus(spark, sf_dir)
     seed = sorted(emb.filter(F.col("vec_id") < K_PQ)
                   .select("vec_id", "qe").collect(),
@@ -856,8 +812,6 @@ def _pq_train(spark: SparkSession, sf_dir: str):
     cents = spark.createDataFrame(
         [(m, cell, ce) for m in range(M_SUB) for cell, ce in books[m]],
         "m int, cell long, ce array<long>")
-    evict_dead_sessions(_PQ_CACHE, cache_key[0])
-    _PQ_CACHE[cache_key] = (emb, cents, assigned)
     return emb, cents, assigned
 
 

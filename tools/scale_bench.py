@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hpctoolkit_dataframe_spark import get_spark  # noqa: E402
 from hpctoolkit_dataframe_spark.plans import explain  # noqa: E402
-from hpctoolkit_dataframe_spark.queries import REGISTRY  # noqa: E402
+from hpctoolkit_dataframe_spark.queries import BUILDS, REGISTRY  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 
@@ -119,13 +119,7 @@ def main() -> None:
 
     # time the memoized shared builds explicitly per SF so flagship
     # timings measure the queries, not the one-time materializations
-    from hpctoolkit_dataframe_spark.queries.cct_tpch import build_cct
-    from hpctoolkit_dataframe_spark.queries.spans import _dup_hits
-    from hpctoolkit_dataframe_spark.queries.vectors import _pq_train
-
-    for label, builder in (("cct_build", build_cct),
-                           ("span_hits_build", _dup_hits),
-                           ("pq_train", _pq_train)):
+    for label, builder in BUILDS.items():
         entry = {}
         for key, d in (("sf0.1", BASE), ("sf1", scale_dir)):
             t0 = time.time()

@@ -48,7 +48,7 @@ def main() -> None:
     spark = get_spark("vector-stream")
     spark.sparkContext.setLogLevel("ERROR")
 
-    emb_all = V._quantized_corpus(spark, sf_dir).localCheckpoint(eager=True)
+    emb_all = V._quantized_corpus(spark, sf_dir)
     cents, _ = V._lloyd(emb_all)
     cents = cents.localCheckpoint(eager=True)
     queries = emb_all.filter(F.col("vec_id") < V.N_QUERIES)
