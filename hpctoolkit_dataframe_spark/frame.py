@@ -167,7 +167,8 @@ class HPCtoolkitDataFrame:
         else:
             assert method == "parent", method
             out = _cct.with_ratio_of_parent(
-                self._df, base_column, column_name, partition_cols)
+                self._df, base_column, column_name, partition_cols,
+                collect_threshold=_cct.IN_MEMORY_ROWS)
         # keep the reference's column placement: ratio right after base (:354)
         cols = [c for c in out.columns if c != column_name]
         idx = cols.index(base_column) + 1

@@ -22,12 +22,20 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import callpath as cp
 
 ROOT_ID = -1  # reference _ROOT_INDEX, hpctoolkit_dataframe.py:48
+
+# Row count up to which the walk-up ratio and the hot path collect their
+# slim projection and walk the tree in Python: one bounded job instead
+# of a distributed plan of several.  One XML profile is ~10^4 nodes.
+IN_MEMORY_ROWS = 100_000
 
 # Build-side row cap for FORCING a shuffled-hash join in the parent/
 # ancestor self-joins.  SHJ was measured faster than sort-merge at
@@ -296,7 +304,9 @@ def with_ratio_of_parent(
             by_path: dict = {}
             for r in rows:
                 by_path[(tuple(r[c] for c in pc), tuple(r["__p"]))] = r["__v"]
-            out_rows = []
+            # keyed by (partition, id): one ratio per join key, so the
+            # join-back never multiplies rows
+            ratios: dict = {}
             _MISSING = object()
             for r in rows:
                 key = tuple(r[c] for c in pc)
@@ -324,15 +334,20 @@ def with_ratio_of_parent(
                         break
                 ratio = (None if base in (None, 0) or v is None
                          else v / base)
-                out_rows.append((*key, r["id"], ratio))
-            from pyspark.sql import types as T
-
-            fields = [df.schema[c] for c in pc] + [
+                ratios[(*key, r["id"])] = ratio
+            schema = T.StructType([df.schema[c] for c in pc] + [
                 T.StructField("id", T.LongType()),
-                T.StructField(column_name, T.DoubleType())]
-            ratios = df.sparkSession.createDataFrame(
-                out_rows, T.StructType(fields))
-            return df.join(F.broadcast(ratios), on=[*pc, "id"], how="left")
+                T.StructField(column_name, T.DoubleType())])
+            # an Arrow table, not pandas (which reads NaN as NULL) and
+            # not a list (a pickled RDD: Python workers on every scan)
+            keys = list(ratios)
+            table = pa.table({
+                **{c: [k[i] for k in keys] for i, c in enumerate(pc)},
+                "id": [k[-1] for k in keys],
+                column_name: list(ratios.values()),
+            }, schema=to_arrow_schema(schema))
+            return df.join(F.broadcast(df.sparkSession.createDataFrame(
+                table, schema)), on=[*pc, "id"], how="left")
 
     if persist_input:
         # the input feeds several plan branches (node table, ancestor
@@ -469,7 +484,7 @@ def hot_path(
     threshold: float = 0.05,
     callpath_col: str = "callpath",
     max_iters: int = 64,
-    collect_threshold: int = 100_000,
+    collect_threshold: int = IN_MEMORY_ROWS,
 ) -> DataFrame:
     """Greedy hottest-descendant chain.
 

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import glob as _glob
 import os as _os
-import xml.etree.ElementTree as ET
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import types as T
@@ -39,7 +38,7 @@ from pyspark.sql.datasource import (
 # captured at import so the by-value pickle of THIS module carries the
 # parser functions with it (their module is registered by value too)
 from .hpctoolkit_xml import (  # noqa: F401
-    _parse_header, _raw_schema, parse_experiment_rows)
+    _raw_schema, parse_experiment_rows, read_header)
 
 
 class _FilePartition(InputPartition):
@@ -78,8 +77,7 @@ class HPCToolkitXMLDataSource(DataSource):
         errors: list[str] = []
         for candidate in _matched_files(self.options.get("path")):
             try:
-                with open(candidate, "rb") as f:
-                    header = _parse_header(ET.fromstring(f.read()))
+                header = read_header(candidate)
                 return _raw_schema(sorted(header["metrics_by_id"]))
             except Exception as e:  # schema comes from the first
                 if on_error != "skip":  # PARSEABLE file in skip mode

@@ -372,3 +372,178 @@ def test_union_heterogeneous_mixed_fleet(spark):
     with pytest.raises(ValueError, match="MetricTable ids"):
         load_experiments(spark, [EXPERIMENT1, EXPERIMENT2],
                          add_percentage_columns=False)
+
+
+# ---------------------------------------------------------------------------
+# reference-free loads of a hand-written profile
+# ---------------------------------------------------------------------------
+
+MINI_PCT = "CPUTIME (usec):Mean (I)"
+
+# PF/L/S nesting under the root, one callsite (C, spliced: PF 5 hangs off
+# PF 1), ``Mean (I) = $2 / $7`` and metrics left out: S 7, L 11 and S 8
+# (no $7) have no Mean; S 10 outweighs its parent L 9, so its walk-up
+# continues to PF 5; the NULL L 11 stops the walk of S 12.
+MINI_CCT_XML = """<?xml version="1.0"?>
+<HPCToolkitExperiment version="2.2">
+<SecCallPathProfile i="0" n="mini">
+<SecHeader>
+  <MetricTable>
+    <Metric i="2" n="CPUTIME (usec):Sum (I)" v="raw" t="inclusive"/>
+    <Metric i="3" n="CPUTIME (usec):Sum (E)" v="raw" t="exclusive"/>
+    <Metric i="4" n="CPUTIME (usec):Mean (I)" v="derived-incr" t="inclusive">
+      <MetricFormula t="combine" frm="sum($4, $4)"/>
+      <MetricFormula t="finalize" frm="$2 / $7"/>
+    </Metric>
+    <Metric i="7" n="CPUTIME (usec):num-src (I)" v="raw" t="inclusive"/>
+  </MetricTable>
+  <LoadModuleTable><LoadModule i="0" n="/bin/app"/></LoadModuleTable>
+  <FileTable><File i="0" n="./src/main.c"/><File i="1" n="work.c"/></FileTable>
+  <ProcedureTable><Procedure i="0" n="main"/><Procedure i="1" n="work"/></ProcedureTable>
+</SecHeader>
+<SecCallPathProfileData>
+<M n="2" v="100"/><M n="7" v="4"/>
+<PF i="1" s="0" l="1" lm="0" f="0" n="0"><M n="2" v="100"/><M n="3" v="10"/><M n="7" v="4"/>
+  <L i="2" l="5"><M n="2" v="60"/><M n="7" v="4"/>
+    <S i="3" l="6"><M n="2" v="60"/><M n="3" v="60"/><M n="7" v="4"/></S>
+  </L>
+  <C i="4" l="8"><M n="2" v="30"/><M n="7" v="4"/>
+    <PF i="5" s="1" l="20" lm="0" f="1" n="1"><M n="2" v="30"/><M n="3" v="5"/><M n="7" v="4"/>
+      <S i="6" l="21"><M n="2" v="25"/><M n="3" v="25"/><M n="7" v="4"/></S>
+      <S i="7" l="22"/>
+      <L i="9" l="23"><M n="2" v="4"/><M n="7" v="4"/>
+        <S i="10" l="24"><M n="2" v="6"/><M n="3" v="6"/><M n="7" v="4"/></S>
+      </L>
+      <L i="11" l="25">
+        <S i="12" l="26"><M n="2" v="8"/><M n="3" v="8"/><M n="7" v="4"/></S>
+      </L>
+    </PF>
+  </C>
+  <S i="8" l="9"><M n="2" v="10"/><M n="3" v="10"/></S>
+</PF>
+</SecCallPathProfileData>
+</SecCallPathProfile>
+</HPCToolkitExperiment>
+"""
+
+# id -> (Mean (I), ratio of total, ratio of parent), worked out by hand
+# from the tree above (root Mean = 100 / 4 = 25)
+MINI_EXPECTED = {
+    -1: (25.0, 1.0, 1.0),
+    1: (25.0, 1.0, 1.0),
+    2: (15.0, 15 / 25, 15 / 25),
+    3: (15.0, 15 / 25, 1.0),
+    5: (7.5, 7.5 / 25, 7.5 / 25),
+    6: (6.25, 6.25 / 25, 6.25 / 7.5),
+    7: (None, None, None),
+    9: (1.0, 1 / 25, 1 / 7.5),
+    10: (1.5, 1.5 / 25, 1.5 / 7.5),  # L 9 (1.0) < 1.5: walks on to PF 5
+    11: (None, None, None),
+    12: (2.0, 2 / 25, None),          # L 11 exists without a value: stop
+    8: (None, None, None),
+}
+
+
+@pytest.fixture(scope="module")
+def mini_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("mini_cct")
+    for i in range(9):  # 9 copies: a glob over them takes the executor path
+        (d / f"mini_{i}.xml").write_text(MINI_CCT_XML)
+    return d
+
+
+def _rows_by_id(df):
+    return {r["id"]: r.asDict() for r in df.collect()}
+
+
+def test_mini_fast_and_distributed_paths_agree(spark, mini_dir):
+    fast, _ = load_experiments(spark, str(mini_dir / "mini_0.xml"))
+    dist, _ = load_experiments(spark, str(mini_dir / "mini_*.xml"))
+    assert dist.columns == fast.columns
+    assert dist.select("profile_id").distinct().count() == 9
+    one = dist.filter(F.col("profile_id") == str(mini_dir / "mini_0.xml"))
+    assert _rows_by_id(one) == _rows_by_id(fast)
+    assert len(_rows_by_id(fast)) == len(MINI_EXPECTED)
+
+
+def test_mini_ratio_columns_match_hand_computation(spark, mini_dir):
+    df, meta = load_experiments(spark, str(mini_dir / "mini_0.xml"))
+    assert meta.meaningful_columns["percentage"] == MINI_PCT
+    got = _rows_by_id(df)
+    assert set(got) == set(MINI_EXPECTED)
+    for i, want in MINI_EXPECTED.items():
+        row = got[i]
+        have = (row[MINI_PCT], row[MINI_PCT + " ratio of total"],
+                row[MINI_PCT + " ratio of parent"])
+        assert have == pytest.approx(want), i
+    # callsite spliced: PF 5 hangs off PF 1; locations inherited
+    assert got[5]["callpath"] == [1, 5] and got[6]["callpath"] == [1, 5, 6]
+    assert (got[6]["procedure"], got[6]["file"]) == ("work", "work.c")
+    assert got[3]["file path"] == "src/main.c"
+    # root (E) <- (I) repair
+    assert got[-1]["CPUTIME (usec):Sum (E)"] == 100.0
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_mini_absent_metrics_are_null_never_nan(spark, mini_dir, arrow):
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        for target in ("mini_0.xml", "mini_*.xml"):
+            df, _ = load_experiments(spark, str(mini_dir / target))
+            doubles = [f.name for f in df.schema.fields
+                       if f.dataType.typeName() == "double"]
+            nan = df.select(*[F.sum(F.isnan(f"`{c}`").cast("int")).alias(c)
+                              for c in doubles]).first().asDict()
+            assert set(nan.values()) == {0}, (target, nan)
+            # S 7 carries no metric at all: every metric column is NULL
+            row = df.filter(F.col("id") == 7).first().asDict()
+            assert all(row[c] is None for c in doubles), (target, row)
+            assert df.filter(F.col("procedure") == "nan").count() == 0
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_mini_loaded_frame_is_materialized(spark, mini_dir):
+    """A later op scans the loaded rows: one job, no replay of the
+    ingest, formulas or ratio tables."""
+    h = HPCtoolkitDataFrame(path=str(mini_dir / "mini_0.xml"), spark=spark)
+    sc = spark.sparkContext
+    group = "mini-materialized-probe"
+    sc.setJobGroup(group, "at_depth(1).compact after load")
+    try:
+        rows = h.at_depth(1).compact.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r[MINI_PCT] for r in rows] == [25.0]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_mini_add_ratio_column_parent_equals_loaded_column(spark, mini_dir):
+    h = HPCtoolkitDataFrame(path=str(mini_dir / "mini_0.xml"), spark=spark)
+    out = h.add_ratio_column(MINI_PCT, "x", "parent").df
+    assert out.count() == len(MINI_EXPECTED)
+    assert out.filter(~F.col("x").eqNullSafe(
+        F.col(f"`{MINI_PCT} ratio of parent`"))).count() == 0
+
+
+def test_each_file_parsed_once(spark, mini_dir, monkeypatch):
+    """The fast path takes its header from the tree it parsed; header
+    reads for the executor path stop at the end of SecHeader."""
+    from hpctoolkit_dataframe_spark.sources import hpctoolkit_xml as hx
+
+    calls = []
+    real = hx.ET.fromstring
+    monkeypatch.setattr(hx.ET, "fromstring",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    df, _ = load_experiments(spark, str(mini_dir / "mini_0.xml"),
+                             add_percentage_columns=False)
+    assert len(calls) == 1
+    # a body cut off mid-tree: the header still reads, the parse fails
+    cut = MINI_CCT_XML[:MINI_CCT_XML.index("<L i=\"9\"")]
+    bad = mini_dir.parent / "cut.xml"
+    bad.write_text(cut)
+    assert sorted(hx.read_header(str(bad))["metrics_by_id"]) == [2, 3, 4, 7]
+    with pytest.raises(Exception):
+        hx.parse_experiment_rows(bad.read_bytes(), str(bad))
